@@ -14,33 +14,37 @@ under bulk-synchronous execution is impossible in general (SURVEY.md
    counterpart of the reference's shuffled strictly-greater scan
    (src/label_propagation.jl:31-52) and the multilevel variant's
    sticky-current rule (src/multilevel_label_propagation.jl:239-266);
- - *semi-synchronous* update schedule: each superstep only vertices
-   whose xxhash64(id) parity matches the iteration parity may move.
-   Pure BSP LPA oscillates on symmetric structures (a single edge
-   flips labels forever); hash-parity alternation is the standard
-   deterministic fix and converges like async LPA.
+ - *semi-synchronous* update schedule, the only one label_propagation
+   runs: each superstep only vertices whose parity (xxhash64(id) mod 2,
+   or the caller's ``parity_expr``) matches the superstep parity may
+   move. Pure BSP LPA oscillates on symmetric structures (a single
+   edge flips labels forever); parity alternation is the standard
+   deterministic fix and converges like async LPA. lpa_superstep on
+   its own keeps the evaluate-everyone form (the driver's ``lpa_step``
+   oracle).
 
-Convergence: semi-sync runs stop after two consecutive zero-mover
-supersteps — one quiet superstep per parity over the same labeling is
-a true fixpoint (a lone quiet superstep only certifies one parity).
-Sync runs keep the one-shot rule (zero changes and zero would-be
-movers, which coincide when every vertex is evaluated).
+Convergence: a run stops after two consecutive zero-mover supersteps —
+one quiet superstep per parity over the same labeling is a true
+fixpoint (a lone quiet superstep only certifies one parity).
 
 Execution discipline (plans/iterstate.py): per superstep exactly ONE
-action — the state write with changed/wants counts observed on the
-same job. Three tricks keep the plan narrow:
+action — the state write with the mover counts observed on the same
+job. The state is (id, lbl, changed, prevch, prev, deg); each superstep
+plan yields (id, want_lbl) for the listeners it evaluated and
+_next_state turns that into the next state. Tricks that keep the plan
+narrow:
 
  - self rows: the listener's own label enters the gather as a
    zero-weight row flagged cur=true, so (a) every vertex is covered
    without a left-outer join and (b) the sticky tie-break needs no
    extra join against current labels;
- - active-parity listener filter: under the semi-sync schedule only
-   half the vertices may move in a given superstep, so the gather
-   keeps only active-parity listeners' messages — the vote multiset
-   of an inactive vertex is never consulted this superstep, and its
-   row passes through unchanged via the (already-present) state join.
-   This halves every full gather's exchange volume and aggregation
-   cardinality, including the identity-init first superstep where the
+ - active-parity listener filter: only half the vertices may move in
+   a given superstep, so every plan keeps only active-parity
+   listeners' messages — the vote multiset of an inactive vertex is
+   never consulted this superstep, and its row passes through
+   unchanged via the (already-present) state join. This halves every
+   full gather's exchange volume and aggregation cardinality,
+   including the identity-init first superstep where the
    (listener, label) group count peaks at ~2m. Exact: movers are
    decided per-listener from ALL its speakers' labels, which the
    filter does not touch;
@@ -49,27 +53,48 @@ same job. Three tricks keep the plan narrow:
    mover-degree bound is small, gather only listeners whose argmax
    inputs could have changed — exact under sticky tie-breaking
    because an unchanged vote multiset cannot flip a sticky argmax.
-   Semi-sync runs track movers of the last TWO supersteps (state
-   column ``prevch``): a vertex inactive at superstep t re-evaluates
-   at t+1, so movers/mover-neighbors from BOTH t−1 and t are the
-   exact stale set (sync runs keep the one-superstep movers + gated
-   would-be movers form);
+   The stale set is the movers of the last TWO supersteps (state
+   column ``prevch``) and their neighbors: a vertex inactive at
+   superstep t re-evaluates at t+1, so it missed the moves of both;
  - labels round-trip through parquet/bucketed tables (lineage
    truncation + resume snapshots; see iterstate docstring for the
    measured numbers).
+
+The module constants below choose among plans from observed counts;
+none of them changes the answer (test_lpa_strategy_invariance forces
+each plan and pins identical mover histories and labels).
 """
 
 from __future__ import annotations
 
+import math
+import os
 import time as _time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.graph import csr_adjacency, vertices_of, with_weight
 from ..plans.iterstate import StateLoop, no_aqe, shuffle_parts, state_codec
 from .triangles import edge_common_neighbors
+
+# Broadcast frontier: gather only the stale listeners once Σ(deg+1)
+# over the last two supersteps' movers is at most FRONTIER_MAX.
+FRONTIER = True
+FRONTIER_MAX = 200_000
+# Delta counts (unit-vote CSR tables mode): engage when Σ(deg+1) over
+# the movers plus the mover count is at most DELTA_MSGS_FRAC·2m; above
+# DELTA_BCAST_MAX movers the update takes a shuffle join, not a
+# broadcast.
+DELTA = True
+DELTA_MSGS_FRAC = 0.25
+DELTA_BCAST_MAX = 2_000_000
+# Peak-diversity gather widening over the first GATHER_WIDEN_UNTIL
+# supersteps, once a gather task would aggregate more than
+# GATHER_GROUP_BUDGET messages (see label_propagation).
+GATHER_GROUP_BUDGET = 1_500_000
+GATHER_WIDEN_UNTIL = 3
 
 
 @dataclass
@@ -125,8 +150,6 @@ def lpa_superstep(
     sym_edges: DataFrame,
     labels: DataFrame,
     sticky: bool = True,
-    active_parity: int | None = None,
-    parity_expr=None,
     active: DataFrame | None = None,
     listener_pred=None,
     gather_parts: int | None = None,
@@ -135,22 +158,31 @@ def lpa_superstep(
     or bare (src, dst) for the unit-vote fast path — then votes are
     row counts and the gather streams 16B int pairs instead of 24B
     (the same bytes-per-message cut that fixed PageRank's scaling
-    efficiency). ``labels`` is (id, lbl); returns (id, lbl, changed,
-    wants).
+    efficiency). ``labels`` is (id, lbl); returns (id, lbl, changed):
+    every evaluated listener takes its argmax label.
 
     ``listener_pred`` (a Column predicate over ``id``) restricts the
-    gather AND the output to matching listeners — label_propagation
-    passes the active-parity test here so a semi-sync full gather
-    shuffles only the half of the messages whose argmax can act this
-    superstep; the caller passes non-matching rows through unchanged.
-    Default None keeps the evaluate-everyone contract (the driver's
-    ``lpa_step`` oracle runs this form).
+    gather AND the output to matching listeners; ``active`` (an (id)
+    frame, broadcast) restricts the gathered messages, so a listener
+    outside it keeps its label. label_propagation passes the
+    active-parity test and its frontier here, so a full gather
+    shuffles only the messages whose argmax can act this superstep;
+    the caller passes the other rows through unchanged. Default None
+    keeps the evaluate-everyone contract (the driver's ``lpa_step``
+    oracle runs this form).
 
     Kept as a standalone, SQL-checkable unit (the driver oracle runs
     the equivalent ANSI SQL); label_propagation() below fuses the same
     plan into its write job."""
     state = labels.select("id", "lbl")
     unit = "vote" not in sym_edges.columns
+    csr = "srcs" in sym_edges.columns
+    if active is not None and not csr:
+        # listener-keyed rows: drop inactive listeners before the join
+        sym_edges = sym_edges.join(
+            F.broadcast(active.withColumnRenamed("id", "src")),
+            "src", "left_semi",
+        )
 
     def _to_id(df):
         # ONE exchange per superstep: hash-partitioning by id alone
@@ -163,7 +195,7 @@ def lpa_superstep(
                 else df.repartition("id"))
 
     if unit:
-        if "srcs" in sym_edges.columns:
+        if csr:
             # CSR gather: one row per speaker with its listener array
             # (dst, srcs) — half the bytes and n joins instead of 2m
             # (same fast path as PageRank's uniform arcs)
@@ -175,6 +207,8 @@ def lpa_superstep(
             if listener_pred is not None:
                 gather = gather.filter(listener_pred)
             if active is not None:
+                # CSR rows can't be pre-filtered by listener; the
+                # broadcast filter applies post-explode
                 gather = gather.join(
                     F.broadcast(active), "id", "left_semi"
                 )
@@ -224,23 +258,10 @@ def lpa_superstep(
     # argmax (see _struct_argmax for the physical-plan rationale and
     # the rejected packed-key alternative)
     best = _struct_argmax(counts, sticky)
-    want = F.col("want_lbl")
-    if active_parity is not None:
-        # which half of the vertices may move this superstep; the
-        # default hash parity is structure-blind, while an explicit
-        # parity_expr (e.g. pmod(id, 2)) makes the whole run
-        # SQL-oracle-reproducible (driver correctness gate)
-        pexpr = parity_expr if parity_expr is not None else F.pmod(F.xxhash64("id"), F.lit(2))
-        new_lbl = F.when(
-            pexpr == F.lit(active_parity), want
-        ).otherwise(F.col("cur_lbl"))
-    else:
-        new_lbl = want
     return best.select(
         "id",
-        new_lbl.alias("lbl"),
-        (new_lbl != F.col("cur_lbl")).alias("changed"),
-        (want != F.col("cur_lbl")).alias("wants"),
+        F.col("want_lbl").alias("lbl"),
+        (F.col("want_lbl") != F.col("cur_lbl")).alias("changed"),
     )
 
 
@@ -263,63 +284,79 @@ def _vote_edges(edges: DataFrame, weighted: bool, cn_bonus: bool) -> DataFrame:
     return e.unionByName(rev)
 
 
+def _next_state(state: DataFrame, want: DataFrame) -> DataFrame:
+    """Next LPA state from one superstep plan's ``want`` (id, want_lbl),
+    which covers only the listeners the plan evaluated: those move to
+    ``want_lbl``, every other row passes through unchanged. ``prevch``
+    carries the last superstep's movers (the two-superstep frontier)
+    and ``prev`` the last label (the delta-counts update)."""
+    cur = F.col("cur_lbl")
+    new = F.coalesce(F.col("want_lbl"), cur)
+    return state.select(
+        "id", F.col("lbl").alias("cur_lbl"),
+        F.col("changed").alias("pch"), "deg",
+    ).join(want, "id", "left").select(
+        "id",
+        new.alias("lbl"),
+        (new != cur).alias("changed"),
+        F.col("pch").alias("prevch"),
+        cur.alias("prev"),
+        "deg",
+    )
+
+
 def label_propagation(
     edges: DataFrame,
     weighted: bool = False,
     cn_bonus: bool = False,
-    sticky: bool = True,
-    semi_sync: bool = True,
     max_iter: int = 200,
     renumber: bool = True,
-    init_labels: DataFrame | None = None,
-    frontier: bool = True,
-    frontier_max: int = 200_000,
     ledger=None,
     mode: str = "dir",
     state_name: str = "lpa_state",
     parity_expr=None,
-    delta: bool = True,
-    delta_msgs_frac: float = 0.25,
-    delta_bcast_max: int = 2_000_000,
 ) -> LPAResult:
-    """Run LPA to fixpoint. ``cn_bonus=True`` gives nsdlpa
-    (src/label_propagation.jl:77-96); ``weighted=True`` uses edge
-    weights as votes (the hlpa/mlpa gather, src/hlpa.jl:3-28).
+    """Run semi-synchronous, sticky LPA from identity labels (or from
+    the ledger's newest snapshot) to fixpoint or ``max_iter``.
+    ``cn_bonus=True`` gives nsdlpa (src/label_propagation.jl:77-96);
+    ``weighted=True`` uses edge weights as votes (the hlpa/mlpa
+    gather, src/hlpa.jl:3-28). ``parity_expr`` (e.g. ``pmod(id, 2)``)
+    replaces the structure-blind xxhash64 move gate, which makes the
+    whole run SQL-oracle-reproducible (the driver's ``lpa_full`` row).
 
-    ``frontier=True`` switches to broadcast-filtered gathers once the
-    observed mover count drops below ``frontier_max`` — exact under
-    sticky tie-breaking (a vertex whose vote multiset is unchanged
-    keeps its label).
+    Each superstep runs one of four exact plans, picked from observed
+    counts:
 
-    ``delta=True`` (unit-vote CSR tables mode only) switches mid-run to
-    the INCREMENTAL superstep: a bucketed (id, lbl, cnt) neighbor-label
-    count table is maintained from the movers' adjacency only — per
-    mover v, every listener u of v gets cnt(u, old_lbl) −= 1,
-    cnt(u, new_lbl) += 1 — instead of re-gathering all 2m messages.
-    Integer counts make it EXACTLY equivalent to the full
-    re-aggregation (pytest pins label-by-label equality; the lpa_full
-    recursive-CTE oracle pins the semantics the counts reproduce), so
-    the switch is pure execution strategy. Cost per superstep drops
-    from O(2m) gathered messages to O(Σdeg(movers) + |counts|);
-    the counts table starts at ~2m rows and shrinks toward n as labels
-    consolidate, so the switch is gated on the OBSERVED mover-degree
-    bound (the same fbound metric that gates the frontier broadcast):
-    engage when Σ(deg+1 of movers) + wants ≤ ``delta_msgs_frac``·2m.
-    Movers up to ``delta_bcast_max`` are broadcast to the bucketed CSR
-    table (zero exchange); ABOVE the cap they instead take one bucketed
-    hash(dst, P) shuffle join — the 100×-scale path, where a graph can
-    sustain multi-million-mover supersteps for which O(changed_edges)
-    still beats O(2m) — and the path only drops back to the full gather
-    on a genuine COST regression (Σ(deg+1) of movers > the engage
-    fraction of 2m; counts rebuilt if the gate re-engages). A map-typed
-    per-vertex counts column is deliberately NOT used: at engage time a
-    1e7-in-degree web hub would hold a 1e7-entry map in one row — the
-    unbounded-row failure the CSR chunk cap exists to prevent."""
+    - identity-init first superstep (CSR tables mode, duplicate pairs
+      ≤ 2% of messages): a min-neighbor aggregation, see below;
+    - full gather, parity-filtered, its exchange widened while label
+      diversity peaks (GATHER_*);
+    - broadcast frontier (FRONTIER_MAX): the full gather restricted to
+      the listeners whose vote multiset could have changed;
+    - delta counts (DELTA_*, unit-vote CSR tables mode only): a
+      bucketed (id, lbl, cnt) neighbor-label count table maintained
+      from the movers' adjacency only — per mover v, every listener u
+      of v gets cnt(u, old_lbl) −= 1, cnt(u, new_lbl) += 1 — instead
+      of re-gathering all 2m messages. Integer counts make it EXACTLY
+      equivalent to the full re-aggregation (pytest pins
+      label-by-label equality). Cost per superstep drops from O(2m)
+      messages to O(Σdeg(movers) + |counts|); the counts table starts
+      at ~2m rows and shrinks toward n as labels consolidate, so the
+      switch is gated on the observed mover-degree bound. Movers up
+      to DELTA_BCAST_MAX are broadcast to the bucketed CSR table (zero
+      exchange); above the cap they take one bucketed hash(dst, P)
+      shuffle join — the 100×-scale path, where a graph can sustain
+      multi-million-mover supersteps for which O(changed_edges) still
+      beats O(2m) — and the path only drops back to the full gather on
+      a genuine COST regression (counts rebuilt if the gate
+      re-engages). A map-typed per-vertex counts column is
+      deliberately NOT used: at engage time a 1e7-in-degree web hub
+      would hold a 1e7-entry map in one row — the unbounded-row
+      failure the CSR chunk cap exists to prevent."""
     spark = edges.sparkSession
-    import os as _os
 
     # fixed partition/bucket count across cluster sizes (see pagerank)
-    P = int(_os.environ.get("SPARK_GRAFT_STATE_PARTS", "0")) or \
+    P = int(os.environ.get("SPARK_GRAFT_STATE_PARTS", "0")) or \
         spark.sparkContext.defaultParallelism
     loop = StateLoop(spark, state_name, mode=mode, bucket_key="id",
                      parts=P, ledger=ledger)
@@ -327,7 +364,8 @@ def label_propagation(
     sym_plan = _vote_edges(edges, weighted, cn_bonus)
     unit = "vote" not in sym_plan.columns
     sym_table = None
-    sym_dups = sym_msgs = None
+    # total_msgs = 2m (Σdeg, the delta gate's denominator), read off
+    # the symmetrized-view build
     if mode == "tables":
         sym_table = f"{loop.name}_sym"
         loop._drop_table(sym_table)
@@ -337,39 +375,37 @@ def label_propagation(
             # no single row ever holds a web-hub's full in-link list;
             # the gather explodes the arrays, so chunking is invisible
             # to the superstep semantics (lpa_full oracle pins this).
+            # The CSR branch already lands on hash(dst, P) via
+            # csr_adjacency(parts=P) — repartitioning again would move
+            # the full array data through a second exchange.
             sym_plan = csr_adjacency(sym_plan, "dst", "src", "srcs", parts=P)
+            msgs = F.sum(F.size("srcs"))
             # exact duplicate-(listener, speaker) count, observed free
             # on the build write: csr_adjacency buckets chunk rows by
             # pmod(xxhash64(src), nchunks), so every duplicate of a
             # listener lands in the SAME chunk row and a per-row
-            # array_distinct sees all of them. dups == 0 certifies the
-            # identity-init first-superstep fast path below.
-            from pyspark.sql import Observation as _Obs
-
-            dup_obs = _Obs(f"{loop.name}_dups")
-            sym_plan = sym_plan.observe(
-                dup_obs,
-                F.coalesce(
-                    F.sum(F.size("srcs") - F.size(F.array_distinct("srcs"))),
-                    F.lit(0),
-                ).alias("dups"),
-                F.coalesce(F.sum(F.size("srcs")), F.lit(0)).alias("msgs"),
-            )
-        # the CSR branch already lands on hash(dst, P) via
-        # csr_adjacency(parts=P) — repartitioning again would move the
-        # full array data through a second exchange
-        w = (sym_plan if unit else sym_plan.repartition(P, "dst")).write
+            # array_distinct sees all of them. A small dup mass
+            # certifies the identity-init first-superstep plan below.
+            dups = F.sum(F.size("srcs") - F.size(F.array_distinct("srcs")))
+        else:
+            sym_plan = sym_plan.repartition(P, "dst")
+            msgs, dups = F.count(F.lit(1)), F.lit(0)
+        sym_obs = Observation(f"{loop.name}_sym")
+        w = sym_plan.observe(
+            sym_obs,
+            F.coalesce(msgs, F.lit(0)).alias("msgs"),
+            F.coalesce(dups, F.lit(0)).alias("dups"),
+        ).write
         if state_codec():
             w = w.option("compression", state_codec())
         w.bucketBy(P, "dst").mode("overwrite").saveAsTable(sym_table)
-        if unit:
-            got_dup = dup_obs.get
-            sym_dups = int(got_dup["dups"])
-            sym_msgs = int(got_dup["msgs"])
+        total_msgs = int(sym_obs.get["msgs"])
+        sym_dups = int(sym_obs.get["dups"])
         sym = spark.table(sym_table)
     else:
         sym = sym_plan.repartition(P, "dst").persist()
-        sym.count()
+        total_msgs = sym.count()  # one row per message
+        sym_dups = 0
     csr = "srcs" in sym.columns
 
     state = None
@@ -384,66 +420,39 @@ def label_propagation(
         # deg rides in the state so each superstep can OBSERVE
         # sum(deg of movers) — an upper bound on the next active set,
         # gating the frontier broadcast safely even with hub vertices
-        if csr and init_labels is None:
+        if csr:
             # the symmetrized CSR's speaker keys ARE the vertex set and
             # listener degree == speaker degree == sum of array sizes,
             # so the whole state init is ONE n-row agg on the bucketed
-            # table (zero exchange) — previously a 2m-row explode +
-            # shuffle plus a 2m-row vertex distinct, the two most
-            # expensive stages of the warmup superstep
-            state0 = (
-                sym.groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.size("srcs")).cast("long").alias("deg"))
-                .select(
-                    "id",
-                    F.col("id").alias("lbl"),
-                    F.lit(True).alias("changed"),
-                    F.lit(False).alias("wants"),
-                    F.lit(False).alias("prevch"),
-                    F.col("id").alias("prev"),
-                    "deg",
-                )
-            )
-            state = loop.init(state0)
+            # table (zero exchange)
+            degs = sym.groupBy(F.col("dst").alias("id")).agg(
+                F.sum(F.size("srcs")).cast("long").alias("deg"))
         else:
-            if init_labels is not None:
-                labels0 = init_labels.select(
-                    "id", F.col(init_labels.columns[1]).alias("lbl")
-                )
-            else:
-                labels0 = vertices_of(edges).select(
-                    "id", F.col("id").alias("lbl")
-                )
-            if csr:
-                degs = (
-                    sym.groupBy(F.col("dst").alias("id"))
-                    .agg(F.sum(F.size("srcs")).cast("long").alias("deg"))
-                )
-            else:
-                degs = sym.groupBy(F.col("src").alias("id")).agg(
-                    F.count(F.lit(1)).alias("deg")
-                )
-            state = loop.init(
-                labels0.join(degs, "id", "left").select(
-                    "id",
-                    "lbl",
-                    F.lit(True).alias("changed"),
-                    F.lit(False).alias("wants"),
-                    F.lit(False).alias("prevch"),
-                    F.col("lbl").alias("prev"),
-                    F.coalesce("deg", F.lit(0)).alias("deg"),
-                )
-            )
+            degs = vertices_of(edges).join(
+                sym.groupBy(F.col("src").alias("id")).agg(
+                    F.count(F.lit(1)).alias("deg")),
+                "id", "left")
+        state = loop.init(degs.select(
+            "id",
+            F.col("id").alias("lbl"),
+            F.lit(True).alias("changed"),
+            F.lit(False).alias("prevch"),
+            F.col("id").alias("prev"),
+            F.coalesce("deg", F.lit(0)).alias("deg"),
+        ))
 
+    # listeners whose parity is ``pexpr == it % 2`` may move at
+    # superstep it+1; the default hash parity is structure-blind
+    pexpr = parity_expr if parity_expr is not None \
+        else F.pmod(F.xxhash64("id"), F.lit(2))
     changed_history: list[int] = []
     iter_secs: list[float] = []
     it = start_iter
-    changed_cnt = wants_cnt = None  # unknown -> full gather
+    changed_cnt = None              # unknown -> full gather
     prev_changed_cnt = None         # movers one superstep earlier
-    frontier_bound = None           # Σ(deg+1) over last supersteps' movers
+    frontier_bound = None           # Σ(deg+1) over last superstep's movers
     fbound2_cnt = None              # same over the last TWO supersteps
-    delta_ok = delta and csr and unit and mode == "tables" \
-        and "prev" in state.columns
+    delta_ok = DELTA and csr and "prev" in state.columns
     # identity-init first superstep: with identity labels, (listener,
     # label) vote groups are exactly the (listener, speaker) pairs, so
     # the argmax needs no 2m-group count — unique pairs contribute cnt-1
@@ -451,71 +460,56 @@ def label_propagation(
     # pairs (sym_dups, from the CSR build) get their true counts from
     # the few rows that contain them. EXACT for any input; engaged only
     # while the dup mass is small (above ~2% the dup rows approach the
-    # general gather's cost anyway). Requires a fresh identity start
-    # (no init_labels, not resumed) under sticky tie-breaking.
-    simple1 = (
-        csr and unit and sticky and mode == "tables"
-        and init_labels is None and start_iter == 0
-        and sym_dups is not None
-        and sym_dups <= 0.02 * max(sym_msgs or 0, 1)
-    )
+    # general gather's cost anyway). Requires a fresh (not resumed)
+    # start.
+    simple1 = csr and start_iter == 0 and \
+        sym_dups <= 0.02 * max(total_msgs, 1)
     used_fast1 = False
     counts = None            # delta mode: materialized (id, lbl, cnt)
     counts_loop = None
     counts_fresh = False     # just (re)built from current labels?
     delta_from = None
-    # one n-row agg on the (materialized) state: Σdeg = 2m is the
-    # delta gate's denominator (previously computed lazily at the
-    # first engage check)
-    total_msgs = int(
-        state.agg(F.sum("deg")).collect()[0][0] or 0)
-    # Peak-diversity gather widening: the first few full gathers of an
-    # identity-init run aggregate near-distinct (listener, label)
-    # groups — at 2m/P groups per task the post-exchange aggregation
-    # outgrows per-task execution memory and spills (A/B at the
-    # 163M-arc bench corpus, 24g heap: superstep 2 median ~45s at
-    # P=64 vs ~21s at 128 gather partitions; identical mover
-    # histories). Widen THAT exchange only, so each task's agg state
-    # fits; the argmax output then takes one extra n-row exchange back
-    # to the P-bucketed state join, which is two orders of magnitude
-    # smaller than the spill it avoids. Later supersteps have
-    # collapsed label sets (group count ≪ messages), so widening is
-    # capped to the first ``_gw_until`` supersteps.
-    _gw_budget = int(
-        _os.environ.get("SPARK_GRAFT_GATHER_GROUP_BUDGET", "1500000"))
-    _gw_until = int(_os.environ.get("SPARK_GRAFT_GATHER_WIDEN_UNTIL", "3"))
-    _gp_force = int(_os.environ.get("SPARK_GRAFT_GATHER_PARTS", "0")) or None
 
     def _gather_parts(it_1based: int) -> int | None:
-        if _gp_force:
-            return _gp_force
-        if it_1based > _gw_until:
+        # Peak-diversity gather widening: the first few full gathers of
+        # an identity-init run aggregate near-distinct (listener, label)
+        # groups — at m/P groups per task (half the 2m messages pass the
+        # parity filter) the post-exchange aggregation outgrows per-task
+        # execution memory and spills (A/B at the 163M-arc bench corpus,
+        # 24g heap: superstep 2 median ~45s at P=64 vs ~21s at 128
+        # gather partitions; identical mover histories). Widen THAT
+        # exchange only, so each task's agg state fits; the argmax
+        # output then takes one extra n-row exchange back to the
+        # P-bucketed state join, which is two orders of magnitude
+        # smaller than the spill it avoids. Later supersteps have
+        # collapsed label sets (group count ≪ messages), so widening is
+        # capped to the first GATHER_WIDEN_UNTIL supersteps.
+        if it_1based > GATHER_WIDEN_UNTIL:
             return None
-        msgs = total_msgs // 2 if semi_sync else total_msgs
-        per_task = msgs // max(P, 1)
-        if per_task <= _gw_budget:
+        per_task = total_msgs // 2 // max(P, 1)
+        if per_task <= GATHER_GROUP_BUDGET:
             return None
-        import math as _math
+        return min(P * math.ceil(per_task / GATHER_GROUP_BUDGET), 8 * P)
 
-        return min(P * _math.ceil(per_task / _gw_budget), 8 * P)
     # shuffle partitions = bucket count keeps the gather agg and the
     # state join co-partitioned with zero extra exchange (restored via
     # context manager even if a superstep raises)
     with shuffle_parts(spark, P), no_aqe(spark):
         while it < max_iter:
             t_it = _time.time()
-            parity = it % 2 if semi_sync else None
+            # the active parity: only these listeners may move, so
+            # every plan keeps only their messages
+            on = pexpr == F.lit(it % 2)
             it += 1
 
-            if counts is not None and total_msgs and \
-                    frontier_bound is not None and \
-                    frontier_bound > delta_msgs_frac * total_msgs:
+            if counts is not None and \
+                    frontier_bound > DELTA_MSGS_FRAC * total_msgs:
                 # COST regression, not a mechanism limit: Σdeg(movers)
                 # grew past the fraction of 2m where the incremental
                 # update is cheaper than one full gather — drop back to
                 # the full gather (the gate below rebuilds the counts
-                # table if it re-engages). A large mover count ALONE no
-                # longer aborts the path: above ``delta_bcast_max`` the
+                # table if it re-engages). A large mover count ALONE
+                # does not abort the path: above DELTA_BCAST_MAX the
                 # movers side switches from a broadcast to a bucketed
                 # shuffle join (below), so multi-million-mover
                 # supersteps — the sustained regime of a 100× graph —
@@ -539,7 +533,7 @@ def label_propagation(
                         F.col("prev").alias("old_lbl"),
                         F.col("lbl").alias("new_lbl"),
                     )
-                    if changed_cnt <= delta_bcast_max:
+                    if changed_cnt <= DELTA_BCAST_MAX:
                         # small mover set: zero-exchange broadcast join
                         mside = F.broadcast(movers)
                     else:
@@ -582,43 +576,20 @@ def label_propagation(
                     )
                     counts, _ = counts_loop.step(merged, {})
                 # argmax over the maintained counts: both sides bucketed
-                # by id, zero exchange. Semi-sync: only active-parity
-                # listeners' argmax can act, so the counts side is
-                # parity-filtered up front — inactive rows fall out of
-                # ``best`` and pass through via the left join below
-                # (coalesce keeps their current label), exactly like the
-                # filtered full gather.
-                cnt_side = counts.select("id", "lbl", "cnt")
-                if parity is not None:
-                    pexpr = parity_expr if parity_expr is not None \
-                        else F.pmod(F.xxhash64("id"), F.lit(2))
-                    cnt_side = cnt_side.filter(pexpr == F.lit(parity))
-                j = cnt_side.join(
+                # by id, zero exchange; the counts side is
+                # parity-filtered up front, exactly like the filtered
+                # full gather
+                want = counts.select("id", "lbl", "cnt").filter(on).join(
                     state.select("id", F.col("lbl").alias("cur_lbl")), "id"
-                )
-                best = j.groupBy("id").agg(
+                ).groupBy("id").agg(
                     F.max(F.struct(
                         F.col("cnt"),
-                        ((F.col("lbl") == F.col("cur_lbl")).cast("int")
-                         if sticky else F.lit(0)).alias("t1"),
+                        (F.col("lbl") == F.col("cur_lbl")).cast("int")
+                        .alias("t1"),
                         (-F.col("lbl")).alias("t2"),
                         F.col("lbl").alias("lbl"),
                     )).alias("_want")
                 ).select("id", F.col("_want.lbl").alias("want_lbl"))
-                base = state.select(
-                    "id", F.col("lbl").alias("cur_lbl"),
-                    F.col("changed").alias("pch"), "deg")
-                want = F.coalesce("want_lbl", F.col("cur_lbl"))
-                new_lbl = want
-                stepped = base.join(best, "id", "left").select(
-                    "id",
-                    new_lbl.alias("lbl"),
-                    (new_lbl != F.col("cur_lbl")).alias("changed"),
-                    (want != F.col("cur_lbl")).alias("wants"),
-                    F.col("pch").alias("prevch"),
-                    F.col("cur_lbl").alias("prev"),
-                    "deg",
-                )
             elif it == 1 and simple1:
                 # ---- identity-init first superstep, min-neighbor plan ----
                 # The general plan's (listener, label) count aggregation
@@ -639,47 +610,44 @@ def label_propagation(
                 # test_lpa_first_superstep_fastpath and transitively by
                 # the lpa_full recursive-CTE oracle.
                 used_fast1 = True
-                # semi-sync: only active-parity listeners can act — the
-                # min-agg and dup-correction gathers keep only their
-                # messages (half the exchange); inactive rows fall to
-                # the want=cur degenerate case of the left join below
-                pfilter = None
-                if parity is not None:
-                    pexpr = parity_expr if parity_expr is not None \
-                        else F.pmod(F.xxhash64("id"), F.lit(2))
-                    pfilter = pexpr == F.lit(parity)
-                ugather = sym.select(
-                    F.col("dst").alias("spk"),
-                    F.explode("srcs").alias("id"),
+
+                def _votes(rows):
+                    return rows.select(
+                        F.col("dst").alias("spk"),
+                        F.explode("srcs").alias("id"),
+                    ).filter(on)
+
+                best = _votes(sym).groupBy("id").agg(
+                    F.min(
+                        F.when(F.col("spk") != F.col("id"), F.col("spk"))
+                    ).alias("mn"),
+                    F.max((F.col("spk") == F.col("id")).cast("int")
+                          ).alias("selfv"),
                 )
-                if pfilter is not None:
-                    ugather = ugather.filter(pfilter)
-                uniq = (
-                    ugather
-                    .groupBy("id")
-                    .agg(
-                        F.min(
-                            F.when(F.col("spk") != F.col("id"), F.col("spk"))
-                        ).alias("mn"),
-                        F.max((F.col("spk") == F.col("id")).cast("int")
-                              ).alias("selfv"),
-                    )
-                )
-                best = uniq
+                # identity init: a listener's current label is its id
+                cands = [
+                    F.struct(
+                        F.coalesce(F.col("selfv"), F.lit(0)).cast("long")
+                        .alias("cnt"),
+                        F.lit(1).alias("t1"),
+                        (-F.col("id")).cast("long").alias("t2"),
+                        F.col("id").alias("lbl"),
+                    ),
+                    F.when(
+                        F.col("mn").isNotNull(),
+                        F.struct(
+                            F.lit(1).cast("long").alias("cnt"),
+                            F.lit(0).alias("t1"),
+                            (-F.col("mn")).cast("long").alias("t2"),
+                            F.col("mn").alias("lbl"),
+                        ),
+                    ),
+                ]
                 if sym_dups:
-                    dgather = (
-                        sym.filter(
-                            F.size("srcs") != F.size(F.array_distinct("srcs"))
-                        )
-                        .select(
-                            F.col("dst").alias("spk"),
-                            F.explode("srcs").alias("id"),
-                        )
-                    )
-                    if pfilter is not None:
-                        dgather = dgather.filter(pfilter)
                     dupc = (
-                        dgather
+                        _votes(sym.filter(
+                            F.size("srcs") != F.size(F.array_distinct("srcs"))
+                        ))
                         .groupBy("id", "spk")
                         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
                         .filter(F.col("cnt") > 1)
@@ -692,179 +660,41 @@ def label_propagation(
                             F.col("spk").alias("lbl"),
                         )).alias("wd"))
                     )
-                    best = uniq.join(dupc, "id", "left")
-                base = state.select(
-                    "id", F.col("lbl").alias("cur_lbl"),
-                    F.col("changed").alias("pch"), "deg")
-                joined = base.join(best, "id", "left")
-                cand_self = F.struct(
-                    F.coalesce(F.col("selfv"), F.lit(0)).cast("long")
-                    .alias("cnt"),
-                    F.lit(1).alias("t1"),
-                    (-F.col("cur_lbl")).cast("long").alias("t2"),
-                    F.col("cur_lbl").alias("lbl"),
-                )
-                cand_min = F.when(
-                    F.col("mn").isNotNull(),
-                    F.struct(
-                        F.lit(1).cast("long").alias("cnt"),
-                        F.lit(0).alias("t1"),
-                        (-F.col("mn")).cast("long").alias("t2"),
-                        F.col("mn").alias("lbl"),
-                    ),
-                )
-                cands = [cand_self, cand_min]
-                if sym_dups:
+                    best = best.join(dupc, "id", "left")
                     cands.append(F.col("wd"))
-                # the parity gate already acted as the gather filter:
-                # filtered-out listeners have no uniq/dupc row, so their
-                # candidates degenerate to the self candidate (want=cur)
-                want = F.greatest(*cands).getField("lbl")
-                new_lbl = want
-                stepped = joined.select(
-                    "id",
-                    new_lbl.alias("lbl"),
-                    (new_lbl != F.col("cur_lbl")).alias("changed"),
-                    (want != F.col("cur_lbl")).alias("wants"),
-                    F.col("pch").alias("prevch"),
-                    F.col("cur_lbl").alias("prev"),
-                    "deg",
-                )
+                want = best.select(
+                    "id", F.greatest(*cands).getField("lbl").alias("want_lbl"))
             else:
-                gather_sym = sym
-                active_set = None
-                if parity is not None:
-                    # semi-sync full gather: evaluate ONLY active-parity
-                    # listeners (lpa_superstep's listener_pred) — half
-                    # the exchange volume and agg cardinality of the
-                    # superstep's dominant stage; inactive rows pass
-                    # through the state left join below unchanged.
-                    # Frontier stale set = movers of the last TWO
-                    # supersteps (changed | prevch) plus their
-                    # neighbors: a vertex inactive at t re-evaluates at
-                    # t+1, so both supersteps' moves (multiset changes
-                    # AND the movers' own sticky-state changes) are
-                    # exactly what it missed; with the filter, every
-                    # evaluated wanter moves, so the old gated
-                    # (wants-and-not-changed) set is structurally empty.
-                    pexpr = parity_expr if parity_expr is not None \
-                        else F.pmod(F.xxhash64("id"), F.lit(2))
-                    small_frontier = (
-                        frontier
-                        and changed_cnt is not None
-                        and fbound2_cnt is not None
-                        and fbound2_cnt <= frontier_max
-                    )
-                    if small_frontier:
-                        movers = state.filter("changed or prevch").select("id")
-                        if csr:
-                            nbrs = sym.join(
-                                F.broadcast(
-                                    movers.withColumnRenamed("id", "dst")),
-                                "dst", "left_semi",
-                            ).select(F.explode("srcs").alias("id"))
-                        else:
-                            nbrs = sym.join(
-                                F.broadcast(
-                                    movers.withColumnRenamed("id", "dst")),
-                                "dst", "left_semi",
-                            ).select(F.col("src").alias("id"))
-                        active = nbrs.unionByName(movers).distinct()
-                        if csr:
-                            # CSR rows can't be pre-filtered by listener;
-                            # the broadcast filter applies post-explode
-                            active_set = active
-                        else:
-                            gather_sym = sym.join(
-                                F.broadcast(
-                                    active.withColumnRenamed("id", "src")),
-                                "src",
-                                "left_semi",
-                            )
-                    ev = lpa_superstep(
-                        gather_sym,
-                        state.select("id", "lbl"),
-                        sticky=sticky,
-                        active=active_set,
-                        listener_pred=pexpr == F.lit(parity),
-                        gather_parts=_gather_parts(it),
-                    ).select(
-                        "id",
-                        F.col("lbl").alias("ev_lbl"),
-                        F.col("changed").alias("ev_ch"),
-                    )
-                    stepped = state.select(
-                        "id", F.col("lbl").alias("cur_lbl"),
-                        F.col("changed").alias("pch"), "deg",
-                    ).join(ev, "id", "left").select(
-                        "id",
-                        F.coalesce("ev_lbl", F.col("cur_lbl")).alias("lbl"),
-                        F.coalesce("ev_ch", F.lit(False)).alias("changed"),
-                        F.coalesce("ev_ch", F.lit(False)).alias("wants"),
-                        F.col("pch").alias("prevch"),
-                        F.col("cur_lbl").alias("prev"),
-                        "deg",
-                    )
-                else:
-                    # sync schedule: every vertex evaluates every
-                    # superstep (no parity filter); frontier keeps the
-                    # one-superstep movers + gated would-be movers form
-                    small_frontier = (
-                        frontier
-                        and changed_cnt is not None
-                        and frontier_bound is not None
-                        and (frontier_bound + wants_cnt) <= frontier_max
-                    )
-                    if small_frontier:
-                        movers = state.filter("changed").select("id")
-                        gated = state.filter("wants and not changed").select("id")
-                        if csr:
-                            nbrs = sym.join(
-                                F.broadcast(
-                                    movers.withColumnRenamed("id", "dst")),
-                                "dst", "left_semi",
-                            ).select(F.explode("srcs").alias("id"))
-                        else:
-                            nbrs = sym.join(
-                                F.broadcast(
-                                    movers.withColumnRenamed("id", "dst")),
-                                "dst", "left_semi",
-                            ).select(F.col("src").alias("id"))
-                        active = (
-                            nbrs.unionByName(movers).unionByName(gated)
-                            .distinct()
-                        )
-                        if csr:
-                            active_set = active
-                        else:
-                            gather_sym = sym.join(
-                                F.broadcast(
-                                    active.withColumnRenamed("id", "src")),
-                                "src",
-                                "left_semi",
-                            )
-
-                    stepped = lpa_superstep(
-                        gather_sym,
-                        state.select("id", "lbl"),
-                        sticky=sticky,
-                        active_parity=parity,
-                        parity_expr=parity_expr,
-                        active=active_set,
-                        gather_parts=_gather_parts(it),
-                    ).join(
-                        state.select(
-                            "id", F.col("lbl").alias("prev"),
-                            F.col("changed").alias("prevch"), "deg"), "id"
-                    )
+                # ---- full gather, active-parity listeners only ----
+                active = None
+                if FRONTIER and changed_cnt is not None \
+                        and fbound2_cnt <= FRONTIER_MAX:
+                    # frontier: movers of the last TWO supersteps
+                    # (changed | prevch) plus their neighbors — a vertex
+                    # inactive at t re-evaluates at t+1, so both
+                    # supersteps' moves (multiset changes AND the movers'
+                    # own sticky-state changes) are exactly what it
+                    # missed
+                    movers = state.filter("changed or prevch").select(
+                        F.col("id").alias("dst"))
+                    hit = sym.join(F.broadcast(movers), "dst", "left_semi")
+                    active = hit.select(
+                        (F.explode("srcs") if csr else F.col("src")).alias("id")
+                    ).unionByName(
+                        movers.withColumnRenamed("dst", "id")).distinct()
+                want = lpa_superstep(
+                    sym,
+                    state.select("id", "lbl"),
+                    active=active,
+                    listener_pred=on,
+                    gather_parts=_gather_parts(it),
+                ).select("id", F.col("lbl").alias("want_lbl"))
             state, got = loop.step(
-                stepped,
+                _next_state(state, want),
                 {
                     "changed": F.sum(F.col("changed").cast("long")),
-                    "wants": F.sum(F.col("wants").cast("long")),
-                    # bound on |active|: movers + their neighbors (+ the
-                    # sync schedule's gated set); fbound2 widens it to
-                    # the last TWO supersteps for the semi-sync frontier
+                    # bound on |active|: movers + their neighbors;
+                    # fbound2 widens it to the last TWO supersteps
                     "fbound": F.sum(
                         F.when(F.col("changed"), F.col("deg") + 1).otherwise(F.lit(0))
                     ),
@@ -877,39 +707,34 @@ def label_propagation(
                 },
             )
             changed_cnt = int(got.get("changed") or 0)
-            wants_cnt = int(got.get("wants") or 0)
             frontier_bound = int(got.get("fbound") or 0)
             fbound2_cnt = int(got.get("fbound2") or 0)
             changed_history.append(changed_cnt)
             iter_secs.append(_time.time() - t_it)
-            if parity is not None:
-                # one quiet superstep certifies only one parity; two in
-                # a row evaluate BOTH parities on the same labeling —
-                # a true fixpoint (and with the listener filter, an
-                # inactive vertex's would-be move is simply its move one
-                # superstep later, so this never stops early)
-                if changed_cnt == 0 and prev_changed_cnt == 0:
-                    break
-            elif changed_cnt == 0 and wants_cnt == 0:
+            # one quiet superstep certifies only one parity; two in a
+            # row evaluate BOTH parities on the same labeling — a true
+            # fixpoint (an inactive vertex's would-be move is simply its
+            # move one superstep later, so this never stops early)
+            if changed_cnt == 0 and prev_changed_cnt == 0:
                 break
             prev_changed_cnt = changed_cnt
-            if delta_ok and counts is None:
-                if frontier_bound + wants_cnt <= delta_msgs_frac * total_msgs:
-                    # engage: ONE full gather builds the counts table
-                    if counts_loop is None:
-                        counts_loop = StateLoop(
-                            spark, f"{state_name}_cnt", mode="tables",
-                            bucket_key="id", parts=P)
-                    gather0 = sym.join(
-                        state.select(F.col("id").alias("dst"), "lbl"), "dst"
-                    ).select(F.explode("srcs").alias("id"), "lbl")
-                    counts = counts_loop.init(
-                        gather0.repartition(P, "id")
-                        .groupBy("id", "lbl")
-                        .agg(F.count(F.lit(1)).alias("cnt")),
-                        start_iter=it,
-                    )
-                    counts_fresh = True
+            if delta_ok and counts is None and \
+                    frontier_bound + changed_cnt <= DELTA_MSGS_FRAC * total_msgs:
+                # engage: ONE full gather builds the counts table
+                if counts_loop is None:
+                    counts_loop = StateLoop(
+                        spark, f"{state_name}_cnt", mode="tables",
+                        bucket_key="id", parts=P)
+                gather0 = sym.join(
+                    state.select(F.col("id").alias("dst"), "lbl"), "dst"
+                ).select(F.explode("srcs").alias("id"), "lbl")
+                counts = counts_loop.init(
+                    gather0.repartition(P, "id")
+                    .groupBy("id", "lbl")
+                    .agg(F.count(F.lit(1)).alias("cnt")),
+                    start_iter=it,
+                )
+                counts_fresh = True
 
     if mode != "tables":
         sym.unpersist()

@@ -187,8 +187,10 @@ def _write_cluster_section(report, rows, small_c, big_c) -> None:
     text = open(path).read() if os.path.exists(path) else ""
     if CLUSTER_START in text and CLUSTER_END in text:
         pre = text[: text.index(CLUSTER_START)]
+        # block ends in one newline; keep exactly one blank line
+        # before the next section
         post = text[text.index(CLUSTER_END) + len(CLUSTER_END):].lstrip("\n")
-        text = pre + block + post
+        text = pre + block + ("\n" + post if post else "")
     else:
         marker = "## Deployment / resume check"
         if marker in text:
@@ -366,9 +368,11 @@ def main() -> None:
     if os.path.exists(prev_path):
         prev = open(prev_path).read()
         if CLUSTER_START in prev and CLUSTER_END in prev:
-            lines.append(
+            lines += [
                 prev[prev.index(CLUSTER_START):
-                     prev.index(CLUSTER_END) + len(CLUSTER_END)])
+                     prev.index(CLUSTER_END) + len(CLUSTER_END)],
+                "",
+            ]
         if marker in prev:
             lines.append(prev[prev.index(marker):])
     with open(prev_path, "w") as f:

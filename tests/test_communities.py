@@ -17,6 +17,7 @@ from communitydetection_jl_spark.operators.compare import (
     rand_index,
 )
 from communitydetection_jl_spark.operators.louvain import _local_louvain, louvain
+from communitydetection_jl_spark.operators import lpa as lpa_mod
 from communitydetection_jl_spark.operators.lpa import lpa, nsdlpa, permute_labels
 from communitydetection_jl_spark.operators.modularity import modularity
 from communitydetection_jl_spark.operators.multilevel import hlpa
@@ -27,6 +28,15 @@ from .oracles import np_nmi
 
 def _nmi_vs_truth(labels_df, truth_df):
     return nmi(labels_df, truth_df)
+
+
+def _lpa_with(monkeypatch, edges, patch=None, **kw):
+    """lpa() with attributes of the lpa module (its execution-strategy
+    constants, or a spy) replaced for this one run."""
+    with monkeypatch.context() as m:
+        for k, v in (patch or {}).items():
+            m.setattr(lpa_mod, k, v)
+        return lpa(edges, **kw)
 
 
 def test_lpa_two_triangles_exact(spark):
@@ -323,18 +333,19 @@ def test_hlpa_record_quality(spark):
     assert nmi(res.membership, truth) == pytest.approx(1.0)
 
 
-def test_lpa_delta_counts_exact(spark):
+def test_lpa_delta_counts_exact(spark, monkeypatch):
     """The incremental (delta-counts) superstep is EXACTLY equivalent
     to full re-aggregation: identical per-superstep mover counts and
     identical final labels, with the counts path forced to engage from
-    superstep 2 (delta_msgs_frac > 1 covers the Σ(deg+1)+wants bound
+    superstep 2 (DELTA_MSGS_FRAC > 1 covers the Σ(deg+1)+movers bound
     even when every vertex moves)."""
     for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
         edges, _ = fixture(spark)
-        full = lpa(edges, max_iter=30, mode="tables", delta=False,
-                   state_name=f"lpa_nd_{name}")
-        dl = lpa(edges, max_iter=30, mode="tables", delta=True,
-                 delta_msgs_frac=3.0, state_name=f"lpa_dl_{name}")
+        full = _lpa_with(monkeypatch, edges, {"DELTA": False}, max_iter=30,
+                         mode="tables", state_name=f"lpa_nd_{name}")
+        dl = _lpa_with(monkeypatch, edges, {"DELTA_MSGS_FRAC": 3.0},
+                       max_iter=30, mode="tables",
+                       state_name=f"lpa_dl_{name}")
         assert dl.delta_from is not None and dl.delta_from <= 3, name
         assert full.changed_history == dl.changed_history, name
         a = {(r.id, r.comm) for r in full.labels.collect()}
@@ -342,21 +353,22 @@ def test_lpa_delta_counts_exact(spark):
         assert a == b, name
 
 
-def test_lpa_delta_shuffle_join_exact(spark):
+def test_lpa_delta_shuffle_join_exact(spark, monkeypatch):
     """The above-broadcast-cap delta path (movers shipped through a
     bucketed hash(dst, P) shuffle join instead of a driver broadcast)
-    is the SAME counts-table semantics: with delta_bcast_max=0 every
+    is the SAME counts-table semantics: with DELTA_BCAST_MAX=0 every
     incremental superstep is forced through the shuffle join, and the
     run must still match the full re-aggregation mover-for-mover and
     label-for-label. This is the 100×-scale regime (sustained
     multi-million-mover supersteps) exercised at test scale."""
     for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
         edges, _ = fixture(spark)
-        full = lpa(edges, max_iter=30, mode="tables", delta=False,
-                   state_name=f"lpa_nds_{name}")
-        dl = lpa(edges, max_iter=30, mode="tables", delta=True,
-                 delta_msgs_frac=3.0, delta_bcast_max=0,
-                 state_name=f"lpa_dls_{name}")
+        full = _lpa_with(monkeypatch, edges, {"DELTA": False}, max_iter=30,
+                         mode="tables", state_name=f"lpa_nds_{name}")
+        dl = _lpa_with(monkeypatch, edges,
+                       {"DELTA_MSGS_FRAC": 3.0, "DELTA_BCAST_MAX": 0},
+                       max_iter=30, mode="tables",
+                       state_name=f"lpa_dls_{name}")
         assert dl.delta_from is not None and dl.delta_from <= 3, name
         assert full.changed_history == dl.changed_history, name
         a = {(r.id, r.comm) for r in full.labels.collect()}
@@ -387,37 +399,49 @@ def test_lpa_id_shift_invariance(spark):
         assert a == b, mode
 
 
-def test_lpa_strategy_invariance(spark):
-    """Execution strategy must never change the answer: the semi-sync
+def test_lpa_strategy_invariance(spark, monkeypatch):
+    """Execution strategy must never change the answer: the
     active-parity listener filter, the two-superstep (changed|prevch)
-    broadcast frontier, and the delta-counts path are all pure
-    execution choices over the same semantics. Four configurations —
-    plain dir mode, tables with frontier+delta disabled, tables with a
-    force-engaged frontier, tables with force-engaged delta — must
-    produce identical per-superstep mover counts and identical final
-    labels."""
+    broadcast frontier, the delta-counts path and the peak-diversity
+    gather widening are all pure execution choices over the same
+    semantics. Five configurations — plain dir mode, tables with
+    frontier+delta disabled, tables with a force-engaged frontier,
+    tables with force-engaged delta, and dir mode with a forced gather
+    widening (GATHER_GROUP_BUDGET=1 widens the gather exchange of
+    supersteps 1-3) — must produce identical per-superstep mover
+    counts and identical final labels."""
+    configs = {
+        "dir": ("dir", {}),
+        "bare": ("tables", {"FRONTIER": False, "DELTA": False}),
+        "frontier": ("tables", {"DELTA": False, "FRONTIER_MAX": 10**9}),
+        "delta": ("tables", {"DELTA_MSGS_FRAC": 3.0}),
+        "widen": ("dir", {"GATHER_GROUP_BUDGET": 1}),
+    }
+    real_superstep = lpa_mod.lpa_superstep
     for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
         edges, _ = fixture(spark)
-        runs = {
-            "dir": lpa(edges, max_iter=30, mode="dir",
-                       state_name=f"lpa_si_dir_{name}"),
-            "bare": lpa(edges, max_iter=30, mode="tables", frontier=False,
-                        delta=False, state_name=f"lpa_si_bare_{name}"),
-            "frontier": lpa(edges, max_iter=30, mode="tables", delta=False,
-                            frontier_max=10**9,
-                            state_name=f"lpa_si_fr_{name}"),
-            "delta": lpa(edges, max_iter=30, mode="tables",
-                         delta_msgs_frac=3.0,
-                         state_name=f"lpa_si_dl_{name}"),
-        }
+        widths = []
+
+        def spy(*a, **kw):
+            widths.append(kw.get("gather_parts"))
+            return real_superstep(*a, **kw)
+
+        runs = {}
+        for cfg, (mode, patch) in configs.items():
+            if cfg == "widen":
+                patch = {**patch, "lpa_superstep": spy}
+            runs[cfg] = _lpa_with(monkeypatch, edges, patch, max_iter=30,
+                                  mode=mode, state_name=f"lpa_si_{cfg}_{name}")
+        # the widening really engaged, and only where it is capped to
+        assert len(widths) > 3 and all(widths[:3]), (name, widths)
+        assert not any(widths[3:]), (name, widths)
         hist = {k: r.changed_history for k, r in runs.items()}
-        assert hist["dir"] == hist["bare"] == hist["frontier"] == hist["delta"], (
-            name, hist)
+        assert len({tuple(h) for h in hist.values()}) == 1, (name, hist)
         labels = {
-            k: {(r.id, r.comm) for r in v.labels.collect()}
+            k: frozenset((r.id, r.comm) for r in v.labels.collect())
             for k, v in runs.items()
         }
-        assert labels["dir"] == labels["bare"] == labels["frontier"] == labels["delta"], name
+        assert len(set(labels.values())) == 1, name
 
 
 def test_louvain_gain_floor_stop(spark):
